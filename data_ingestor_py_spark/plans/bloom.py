@@ -37,9 +37,9 @@ Design (sharded — the round-6 rework of the one-JSON-per-column sidecar):
   provably absent. The residual filter is always applied regardless —
   false positives cost a read, never a wrong row; torn/corrupt shards
   degrade to no pruning.
-- **Probe hashing reuses the build's own Spark expressions** on a
-  1-row local DataFrame (metadata-scale job), so build and probe can
-  never disagree on the hash function.
+- **Probe hashing reuses the build's own Spark expressions** over the
+  probes as literal rows on the driver (no Spark job), so build and
+  probe can never disagree on the hash function.
 
 Reference parity note: no analogue in the reference (it has no scan
 layer at all); this is the engine-native version of what its warehouse
@@ -53,6 +53,8 @@ import os
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from data_ingestor_py_spark.plans.literal_rows import literal_rows
 
 DEFAULT_M = 1 << 16  # bits per file-filter (8 KiB dense; stored sparse)
 DEFAULT_K = 7
@@ -98,23 +100,19 @@ def build_words(df, value_col: str, m: int, k: int):
 
 def probe_positions(
     spark: SparkSession, values: list, m: int, k: int, spark_type: str = "string"
-) -> dict[str, list[int]]:
-    """probe value -> its k bit positions. The probe value is first cast
-    to the COLUMN'S current Spark type and then rendered through the
-    same ``CAST(v AS STRING)`` the build hashed — str(python_value) is
-    NOT that rendering (Java prints doubles as '1.23E7', booleans as
-    'true'), so the typed round-trip is what keeps build and probe on
-    the same hash input. One local metadata-scale job."""
-    vals = [v for v in values if v is not None]
-    if not vals:
-        return {}
-    df = spark.createDataFrame(
-        [(str(v),) for v in sorted({str(v) for v in vals})], "v string"
-    ).select(F.col("v").cast(spark_type).alias("v")).where(F.col("v").isNotNull())
-    rows = df.select(
-        "v", F.array(*_positions_exprs(F.col("v"), m, k)).alias("ps")
-    ).collect()
-    return {str(r["v"]): list(r["ps"]) for r in rows}
+) -> list[list[int]]:
+    """The k bit positions of each probe value, cast first to the COLUMN'S
+    current Spark type (values that cast to NULL are dropped) and then
+    rendered through the same ``CAST(v AS STRING)`` the build hashed —
+    str(python_value) is NOT that rendering (Java prints doubles as
+    '1.23E7', booleans as 'true'). Evaluated on the driver: no Spark job."""
+    def positions(r):
+        v = r["v"].cast(spark_type)
+        return F.when(v.isNotNull(), F.array(*_positions_exprs(v, m, k)))
+
+    rows = [(v,) for v in sorted({str(v) for v in values if v is not None})]
+    pos = literal_rows(spark, ["v"], rows).select(F.transform("_rows", positions))
+    return [list(p) for p in pos.first()[0] if p is not None]
 
 
 def may_contain(file_entry: dict, positions: list[int]) -> bool:

@@ -444,9 +444,11 @@ def scd2_apply(
     ).collect()
     if not brows:
         return Scd2Stats(0, 0, None, m["version"])
+    # a bucket whose rows all have a NULL seq has NULL lo/hi: fold only
+    # the non-NULL ranges, as the global min/max aggregate did
     rng = {
-        "lo": min(r["lo"] for r in brows),
-        "hi": max(r["hi"] for r in brows),
+        "lo": min((r["lo"] for r in brows if r["lo"] is not None), default=None),
+        "hi": max((r["hi"] for r in brows if r["hi"] is not None), default=None),
         "n": sum(r["n"] for r in brows),
     }
     touched = sorted(r["bkt"] for r in brows)

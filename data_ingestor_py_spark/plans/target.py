@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 
 from data_ingestor_py_spark.operators.dedup import latest_by_key, salted_latest_by_key
 from data_ingestor_py_spark.plans import bloom, filestats
+from data_ingestor_py_spark.plans.literal_rows import literal_rows
 from data_ingestor_py_spark.storage import PosixStorage, StorageAdapter
 
 MANIFEST = "_manifest.json"
@@ -77,8 +78,9 @@ class CommitConflict(Exception):
     miniature)."""
 
 
-def _bucket_expr(key_cols: list[str], num_buckets: int):
-    return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(num_buckets)).cast("int")
+def _bucket_expr(key_cols: list, num_buckets: int):
+    """Bucket id of a row; ``key_cols`` are column names or Columns."""
+    return F.pmod(F.xxhash64(*key_cols), F.lit(num_buckets)).cast("int")
 
 
 def _ref_dirs(m: dict) -> set[str]:
@@ -832,7 +834,7 @@ class TargetTable:
                 self.spark, vals, mb, k, spark_type=cur_type
             )
             if pos:
-                out.append((idx, list(pos.values())))
+                out.append((idx, pos))
         return out
 
     @staticmethod
@@ -1268,12 +1270,12 @@ class TargetTable:
         Scale shape: k probes read at most k bucket dirs out of B — at
         100 TB this is the O(table/B · k) point-read path a serving layer
         needs, vs read().where(...) scanning every bucket. Bucket ids come
-        from one probe-sized Spark job (the same ``xxhash64`` expression
-        the writer uses — never reimplemented driver-side, so probe and
-        data can't drift). The equality filter is pushed into the pruned
-        parquet scan for ≤64 probes; larger probe sets switch to a
-        broadcast semi-join (an IN-list that size stops being pushable
-        anyway)."""
+        from the writer's own ``_bucket_expr`` evaluated over the probes
+        as literal rows on the driver (plans/literal_rows.py — no Spark
+        job, and never reimplemented in Python, so probe and data can't
+        drift). The equality filter is pushed into the pruned parquet
+        scan for ≤64 probes; larger probe sets switch to a broadcast
+        semi-join (an IN-list that size stops being pushable anyway)."""
         if not probes:
             raise ValueError("lookup needs at least one probe")
         m = self._load()
@@ -1289,37 +1291,23 @@ class TargetTable:
         bad = [c for c in cols if c not in m["key_cols"]]
         if bad:
             raise ValueError(f"probe columns must be key columns: {bad}")
-        norm = [
-            {c: (None if p[c] is None else str(p[c])) for c in cols}
-            for p in probes
-        ]
-        probe_df = self.spark.createDataFrame(
-            [tuple(p[c] for c in cols) for p in norm],
-            ", ".join(f"{c} string" for c in cols),
-        )
-        bkts = sorted(
-            r["b"]
-            for r in probe_df.select(
-                _bucket_expr(bucket_cols, B).alias("b")
-            ).distinct().collect()
-        )
+        norm = [tuple(None if p[c] is None else str(p[c]) for c in cols) for p in probes]
+        lit = literal_rows(self.spark, cols, norm)
+        bkts = sorted(set(lit.select(F.transform(
+            "_rows", lambda r: _bucket_expr([r[c] for c in bucket_cols], B)
+        )).first()[0]))
         df = self._state_df(m, bkts).where(F.col("_op") != "D")
         if len(norm) <= 64:
-            conds = []
+            cond = F.lit(False)
             for p in norm:
                 c = F.lit(True)
-                for k, v in p.items():
-                    c = c & (
-                        F.col(k).isNull() if v is None else (F.col(k) == F.lit(v))
-                    )
-                conds.append(c)
-            cond = conds[0]
-            for x in conds[1:]:
-                cond = cond | x
+                for k, v in zip(cols, p):
+                    c = c & (F.col(k).isNull() if v is None else (F.col(k) == F.lit(v)))
+                cond = cond | c
             return df.where(cond)
         # null-safe equality, matching the <=64 path's isNull handling —
         # a plain equi-join would silently drop NULL-keyed matches
-        p = probe_df.distinct().alias("_probe")
+        p = lit.select(F.inline("_rows")).distinct().alias("_probe")
         d = df.alias("_data")
         cond = F.lit(True)
         for c in cols:

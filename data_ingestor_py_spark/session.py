@@ -13,6 +13,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """``SPARK_DRIVER_MEM`` if set; else half the host's physical memory
+    in whole GiB (at least 1g), capped at 32g. In local mode the driver
+    JVM also runs every task, so a fixed 32g outgrows smaller hosts."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "32g"
+    return f"{min(32, max(1, phys // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "data-ingestor-py-spark",
     cores: int | None = None,
@@ -46,9 +60,17 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # PySpark otherwise wraps every DataFrame/Column call to capture its
+        # Python call site for error messages: ~5 py4j round trips per call,
+        # 60% of a merge batch's driver round trips
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # the default 100-entry codegen cache is smaller than one merge +
+        # lookup + view-refresh cycle's generated classes, so each refresh
+        # evicted the merge's classes and both recompiled every cycle
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

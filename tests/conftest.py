@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -44,3 +45,17 @@ def make_table(spark, tmp, **kw):
     )
     defaults.update(kw)
     return TargetTable.create(spark, str(tmp), **defaults)
+
+
+def spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn started), read from statusTracker()
+    under a job group of its own once the listener bus has caught up."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -229,3 +229,20 @@ def test_retype_invalidates_sidecar(spark, tmp_path):
     rows = t.read_where([("n", "=", 9.0)]).collect()
     assert len(rows) == 1 and rows[0]["id"] == "3"
     assert t.scan_plan([("n", "=", 9.5)])["files_read"] == 0
+
+
+def test_probe_positions_run_no_spark_job(spark):
+    """Probe hashing evaluates over literal rows on the driver, and gives
+    the positions the build's own expression gives over a typed column."""
+    from data_ingestor_py_spark.plans import bloom
+    from tests.conftest import spark_jobs
+
+    pos, jobs = spark_jobs(spark, lambda: bloom.probe_positions(
+        spark, [12345678.0, "1.5", None], 4096, 5, spark_type="double"
+    ))
+    assert jobs == 0
+    want = spark.createDataFrame([(12345678.0,), (1.5,)], "v double").select(
+        F.array(*bloom._positions_exprs(F.col("v"), 4096, 5))
+    ).collect()
+    assert sorted(pos) == sorted(list(r[0]) for r in want)
+    assert bloom.probe_positions(spark, [None], 4096, 5) == []

@@ -304,3 +304,31 @@ def test_streaming_scd2_matches_transform(spark, tmp_path):
                     checkpoint_dir=str(tmp_path / "cp"))
     q.awaitTermination(120)
     assert _hist_rows(h) == full
+
+
+def test_null_seq_bucket_does_not_break_segment_range(spark):
+    """One batch: a bucket whose rows all carry a NULL _seq next to a
+    bucket with real _seq values. The per-bucket range fold must skip the
+    NULL range instead of raising, and name the segment from the non-NULL
+    range (what a global min/max over the batch gives)."""
+    from data_ingestor_py_spark.plans.target import _bucket_expr
+
+    h = create_history_table(
+        spark, _mkroot(), KEYS, [("lang", "string"), ("content", "string")],
+        num_buckets=4,
+    )
+    bkt = _bucket_expr(KEYS, 4).alias("b")
+    real_b = spark.createDataFrame([("r", "x")], "repo string, path string") \
+        .select(bkt).first()["b"]
+    cands = spark.createDataFrame(
+        [("n", f"p{i}") for i in range(32)], "repo string, path string"
+    ).select("repo", "path", bkt).collect()
+    null_key = next((r["repo"], r["path"]) for r in cands if r["b"] != real_b)
+    batch = spark.createDataFrame(
+        [("r", "x", "py", "a", 10, "U"), ("r", "x", "py", "b", 11, "U"),
+         (*null_key, "go", "c", None, "U")],
+        "repo string, path string, lang string, content string, _seq long, _op string",
+    ).withColumn("_ts", F.lit(None).cast("timestamp"))
+    st = scd2_apply(h, batch, KEYS, PAY)
+    assert st.segment is not None
+    assert st.segment.startswith(f"seg-{10:020d}-{11:020d}-3-")

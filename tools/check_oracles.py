@@ -24,13 +24,18 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
         if df[c].dtype == object:
             df[c] = df[c].map(lambda v: str(v) if v is not None else None)
         elif str(df[c].dtype).startswith("datetime64"):
-            # Unit (ns vs us) is a pandas artifact the driver normalizes.
+            # Unit (ns vs us) is a pandas artifact the driver normalizes;
+            # a tz-aware column cannot be cast to a naive unit directly.
+            if getattr(df[c].dtype, "tz", None) is not None:
+                df[c] = df[c].dt.tz_localize(None)
             df[c] = df[c].astype("datetime64[ns]")
-        elif pd.api.types.is_integer_dtype(df[c].dtype):
+        elif pd.api.types.is_integer_dtype(df[c].dtype) and not df[c].hasnans:
             # Driver-calibrated dtype canonicalization (r6 evidence): width
             # skews (int32 vs int64) pass the driver hash on 15 green gates,
             # but the one int-vs-FLOAT skew (exact_substring_dedup n_spans)
-            # failed it. So: widen within the family, never across.
+            # failed it. So: widen within the family, never across. A
+            # nullable Int column holding NA cannot widen to int64: it keeps
+            # its dtype and the dtype-strict compare judges it.
             df[c] = df[c].astype("int64")
         elif pd.api.types.is_float_dtype(df[c].dtype):
             df[c] = df[c].astype("float64")
@@ -71,7 +76,13 @@ def main() -> int:
             traceback.print_exc()
             fails.append(name)
             continue
-        a, b = canon(sdf), canon(odf)
+        try:
+            a, b = canon(sdf), canon(odf)
+        except Exception:
+            print(f"[FAIL-CANON] {name}")
+            traceback.print_exc()
+            fails.append(name)
+            continue
         if len(a) != len(b):
             print(f"[FAIL-ROWS] {name}: spark={len(a)} duckdb={len(b)}")
             fails.append(name)
