@@ -27,10 +27,17 @@ the standard targeted-recompute rule: inserts fold for free
 (``greatest``/``least`` against the stored extremum), and only groups
 where a RETRACTION's old value ties-or-beats the stored extremum are
 re-aggregated — from the source pinned at the fold's target version,
-filtered to exactly those groups with a broadcast semi-join. A typical
-batch touches no extremal rows, so the common-case refresh cost stays
-O(delta); the worst case (every group's extremum deleted) degrades to one
-filtered source scan, never a full recompute of untouched groups. Sums
+filtered to exactly those groups with a broadcast semi-join. The rule has
+an insert-dominates exit (the delta rule for extrema of *Conjunctive
+Queries with Inequalities Under Updates*, VLDB 2018): when an insert of
+the same batch also ties-or-beats the stored extremum, that insert holds
+the new extremum whatever the retractions removed, so the group folds
+without the source read — the common case for a ``MAX`` over a monotone
+column such as ``_seq``, whose updates retract the old holder and insert
+a larger value in one batch. A typical batch therefore re-aggregates
+nothing, so the common-case refresh cost stays O(delta); the worst case
+(every group's extremum deleted) degrades to one filtered source scan,
+never a full recompute of untouched groups. Sums
 are maintained in BIGINT so incremental and full recompute agree
 bit-for-bit — float sums would drift by addition order, which is exactly
 what the oracle gate and ``test_mv`` forbid. MIN/MAX values are
@@ -211,11 +218,17 @@ class IncrementalAggregate:
     ) -> BatchRecord | None:
         """Fold the source changelog ``(synced, upto]`` into the aggregate.
 
-        One manifest-pruned changelog scan + one aggregate-scale merge; the
-        MV write touches only groups present in the delta. Returns the
-        committed record, or None if already up to date. Safe to call after
-        every batch (the per-batch hook) or once per N batches — the
-        changelog composes, so both schedules land on the same state.
+        Two actions. The first reads the manifest-pruned changelog once,
+        folds it to one signed row per group, joins the stored groups and
+        caches that group-scale result while collecting, in the same job
+        set, the view table's bucket discovery and whether any group needs
+        MIN/MAX re-aggregation. The second is the view merge's write alone
+        (``merge_apply(discovery=...)``), with the targeted re-aggregation
+        joined in when the first action asked for it. The MV write touches
+        only groups present in the delta. Returns the committed record, or
+        None if already up to date. Safe to call after every batch (the
+        per-batch hook) or once per N batches — the changelog composes, so
+        both schedules land on the same state.
 
         If the MV lags beyond the source's snapshot retention (the base
         version was expired), raises :class:`RefreshGapError` — or, with
@@ -232,15 +245,8 @@ class IncrementalAggregate:
         if v_to <= v_from:
             return None
         t0 = time.time()
-        key_cols = set(self.source._load()["key_cols"])
         try:
-            # persisted: the old-image and new-image sides below are two
-            # union branches over the SAME diff subtree, and Catalyst does
-            # not dedupe common subplans — without the cache the full-outer
-            # changelog join runs twice inside one materialization
-            delta = self.source.diff_versions(
-                v_from, v_to, old_image=True
-            ).persist()
+            delta = self.source.diff_versions(v_from, v_to, old_image=True)
         except FileNotFoundError as e:
             if auto_reseed:
                 return self.reseed()
@@ -251,158 +257,93 @@ class IncrementalAggregate:
                 "the current version — then resume incremental refreshes."
             ) from e
 
-        def img_col(c: str, old: bool):
-            # key columns are identical in both images (keys cannot change)
-            if c in key_cols or not old:
-                return F.col(c)
-            return F.col(f"_old_{c}")
-
         mm = self._mm_cols
-
-        def side(old: bool) -> DataFrame:
-            keep = delta.where(
-                F.col("_change_type") != ("I" if old else "D")
-            )
-            nil = F.lit(None)
-            if self.row_transform is not None:
-                # reconstruct the full image as natural rows, transform it
-                # (may explode), then project the group/value columns the
-                # transform produced — img_col is already resolved here, so
-                # the projection below reads the transform's output verbatim
-                m = self.source._load()
-                names = list(
-                    dict.fromkeys(
-                        list(m["key_cols"])
-                        + [f["name"] for f in self.source.schema_fields(m)]
-                    )
-                )
-                image = keep.select(
-                    *[img_col(c, old).alias(c) for c in names]
-                )
-                keep = self.row_transform(image)
-
-                def val(c, _old):
-                    return F.col(c)
-            else:
-                val = img_col
-            return keep.select(
-                *[
-                    val(g, old).cast("string").alias(g)
-                    for g in self.group_cols
-                ],
-                F.lit(-1 if old else 1).cast("long").alias("_sign"),
-                *[
-                    (F.lit(-1 if old else 1) * val(c, old).cast("long")).alias(n)
-                    for n, c in self.sum_cols
-                ],
-                # min/max: new images feed the insert-side extremum, old
-                # images the retraction-threat extremum (NULL on the
-                # other side so each aggregate sees only its images)
-                *[
-                    (val(c, old).cast(t) if not old else nil.cast(t)).alias(f"_mmnew_{n}")
-                    for n, c, t, _ in mm
-                ],
-                *[
-                    (val(c, old).cast(t) if old else nil.cast(t)).alias(f"_mmold_{n}")
-                    for n, c, t, _ in mm
-                ],
-            )
-
-        contrib = side(old=False).unionByName(side(old=True))
-        d = contrib.groupBy(*self.group_cols).agg(
-            F.sum("_sign").alias("_d_rows"),
-            *[F.sum(n).alias(f"_d_{n}") for n, _ in self.sum_cols],
-            *[
-                (F.max if is_max else F.min)(f"_mmnew_{n}").alias(f"_ins_{n}")
-                for n, _, _, is_max in mm
-            ],
-            *[
-                (F.max if is_max else F.min)(f"_mmold_{n}").alias(f"_ret_{n}")
-                for n, _, _, is_max in mm
-            ],
-        )
-
-        cur = self.table.read().select(*self.group_cols, *self._out_cols)
-        cond = F.lit(True)
-        for g in self.group_cols:
-            cond = cond & d[g].eqNullSafe(cur[g])
-        j = d.join(cur, cond, "left_outer")
-
-        re_agg = persisted = None
+        # a row_transform view folds two union branches over the SAME diff
+        # subtree, and Catalyst does not dedupe common subplans — without
+        # the cache the full-outer changelog join runs twice
+        cached = delta.persist() if self.row_transform is not None else None
+        j = None
         try:
-            if mm:
-                # targeted-recompute rule: a group needs re-aggregation iff a
-                # retraction's old value ties-or-beats the stored extremum
-                # (the retracted row MAY have been the last one holding it);
-                # inserts alone can only improve an extremum, never void it
-                need = F.lit(False)
-                for n, _, _, is_max in mm:
-                    ret, c = d[f"_ret_{n}"], cur[n]
-                    need = need | (
-                        cur["n_rows"].isNotNull()
-                        & ret.isNotNull()
-                        & ((ret >= c) if is_max else (ret <= c))
-                    )
-                j = persisted = j.withColumn("_mm_reagg", need).persist()
+            d = self._fold(delta).groupBy(*self.group_cols).agg(
+                F.sum("_sign").alias("_d_rows"),
+                *[F.sum(n).alias(f"_d_{n}") for n, _ in self.sum_cols],
+                *[
+                    (F.max if is_max else F.min)(f"_mmnew_{n}").alias(f"_ins_{n}")
+                    for n, _, _, is_max in mm
+                ],
+                *[
+                    (F.max if is_max else F.min)(f"_mmold_{n}").alias(f"_ret_{n}")
+                    for n, _, _, is_max in mm
+                ],
+            )
+            cur = self.table.read().select(*self.group_cols, *self._out_cols)
+            # targeted-recompute rule: a group needs re-aggregation iff a
+            # retraction's old value ties-or-beats the stored extremum (the
+            # retracted row MAY have been the last one holding it) and no
+            # insert of the batch ties-or-beats it too — such an insert
+            # holds the new extremum whatever the retractions took away
+            need = F.lit(False)
+            for n, _, _, is_max in mm:
+                ret, ins, c = d[f"_ret_{n}"], d[f"_ins_{n}"], cur[n]
+                holds = (lambda v: v >= c) if is_max else (lambda v: v <= c)
+                need = need | (
+                    cur["n_rows"].isNotNull()
+                    & ret.isNotNull()
+                    & holds(ret)
+                    & ~F.coalesce(holds(ins), F.lit(False))
+                )
+            # group-scale, and read by both actions below
+            j = (
+                d.join(cur, self._on(d, cur), "left_outer")
+                .withColumn("_mm_reagg", need)
+                .persist()
+            )
+
+            def upserts(re_agg, *extra):
+                def mm_val(n: str, is_max: bool):
+                    fast = (F.greatest if is_max else F.least)(cur[n], d[f"_ins_{n}"])
+                    if re_agg is None:
+                        return fast
+                    return F.when(F.col("_mm_reagg"), re_agg[f"_re_{n}"]).otherwise(fast)
+
+                new_n = F.coalesce(cur["n_rows"], F.lit(0)) + d["_d_rows"]
+                if re_agg is not None:
+                    out = j.join(re_agg, self._on(d, re_agg), "left_outer")
+                else:
+                    out = j
+                return out.select(
+                    *[d[g].alias(g) for g in self.group_cols],
+                    new_n.alias("n_rows"),
+                    *[
+                        (F.coalesce(cur[n], F.lit(0)) + d[f"_d_{n}"]).alias(n)
+                        for n, _ in self.sum_cols
+                    ],
+                    *[mm_val(n, is_max).alias(n) for n, _, _, is_max in mm],
+                    F.when(new_n <= 0, F.lit("D")).otherwise(F.lit("U")).alias("_op"),
+                    F.lit(v_to).cast("long").alias("_seq"),
+                    F.current_timestamp().alias("_ts"),
+                    *extra,
+                )
+
+            # action 1: materializes the fold and returns, in one job set,
+            # the view table's bucket discovery and whether any group needs
+            # re-aggregation (the flag rides the discovery's per-bucket rows)
+            disc, stat_rows = self.table._discover(
+                self.table._load(),
+                upserts(None, F.col("_mm_reagg")),
+                extra=[F.max("_mm_reagg").alias("_reagg")],
+            )
+            re_agg = None
+            if any(r["_reagg"] for r in stat_rows):
                 affected = j.where(F.col("_mm_reagg")).select(
                     *[d[g].alias(g) for g in self.group_cols]
                 )
-                if affected.count() > 0:
-                    # re-aggregate ONLY the affected groups from the source
-                    # pinned at v_to (reading live state would race a
-                    # concurrent source commit); broadcast semi-join keeps
-                    # the scan filtered to those groups' rows
-                    pinned = self.source.read_version(v_to)
-                    if self.row_transform is not None:
-                        pinned = self.row_transform(pinned)
-                    srcv = pinned.select(
-                        *[
-                            F.col(g).cast("string").alias(g)
-                            for g in self.group_cols
-                        ],
-                        *[F.col(c).cast(t).alias(f"_src_{n}") for n, c, t, _ in mm],
-                    )
-                    cond2 = F.lit(True)
-                    for g in self.group_cols:
-                        cond2 = cond2 & srcv[g].eqNullSafe(affected[g])
-                    hits = srcv.join(F.broadcast(affected), cond2, "left_semi")
-                    re_agg = hits.groupBy(*self.group_cols).agg(
-                        *[
-                            (F.max if is_max else F.min)(f"_src_{n}").alias(f"_re_{n}")
-                            for n, _, _, is_max in mm
-                        ]
-                    )
-                    cond3 = F.lit(True)
-                    for g in self.group_cols:
-                        cond3 = cond3 & d[g].eqNullSafe(re_agg[g])
-                    j = j.join(re_agg, cond3, "left_outer")
-
-            def mm_val(n: str, is_max: bool):
-                fast = (F.greatest if is_max else F.least)(cur[n], d[f"_ins_{n}"])
-                if re_agg is None:
-                    return fast
-                return F.when(F.col("_mm_reagg"), re_agg[f"_re_{n}"]).otherwise(fast)
-
-            new_n = F.coalesce(cur["n_rows"], F.lit(0)) + d["_d_rows"]
-            upserts = j.select(
-                *[d[g].alias(g) for g in self.group_cols],
-                new_n.alias("n_rows"),
-                *[
-                    (F.coalesce(cur[n], F.lit(0)) + d[f"_d_{n}"]).alias(n)
-                    for n, _ in self.sum_cols
-                ],
-                *[mm_val(n, is_max).alias(n) for n, _, _, is_max in mm],
-                F.when(new_n <= 0, F.lit("D")).otherwise(F.lit("U")).alias("_op"),
-                F.lit(v_to).cast("long").alias("_seq"),
-                F.current_timestamp().alias("_ts"),
-            )
+                re_agg = self._reaggregate(v_to, affected)
+            # action 2: the view merge's write alone
             st = self.table.merge_apply(
-                upserts,
+                upserts(re_agg),
                 stats="light",
-                # the fold output is group-scale but its lineage is the
-                # whole changelog diff + aggregate — cache it so the
-                # merge's two actions run the diff once, not twice
-                persist_batch=True,
+                discovery=disc,
                 # committed atomically with the fold: makes the fold/
                 # checkpoint gap crash-recoverable (_roll_forward_pending)
                 app_meta={
@@ -412,9 +353,10 @@ class IncrementalAggregate:
                 },
             )
         finally:
-            delta.unpersist()
-            if persisted is not None:
-                persisted.unpersist()
+            if cached is not None:
+                cached.unpersist()
+            if j is not None:
+                j.unpersist()
         t1 = time.time()
         rec = BatchRecord(
             batch_id=v_to,
@@ -433,6 +375,95 @@ class IncrementalAggregate:
         self.cp.commit(rec)
         return rec
 
+    def _on(self, a: DataFrame, b: DataFrame):
+        """NULL-safe equality of ``a`` and ``b`` on every group column."""
+        cond = F.lit(True)
+        for g in self.group_cols:
+            cond = cond & a[g].eqNullSafe(b[g])
+        return cond
+
+    def _fold(self, delta: DataFrame) -> DataFrame:
+        """Signed contribution rows of a changelog diff: each diff row's new
+        image (+1, unless a delete) and old image (-1, unless an insert),
+        projected to the group, sum and min/max inputs."""
+        m = self.source._load()
+        key_cols = set(m["key_cols"])
+        nil = F.lit(None)
+
+        def image(old: bool):
+            # key columns are identical in both images (keys cannot change)
+            return lambda c: F.col(f"_old_{c}") if old and c not in key_cols else F.col(c)
+
+        def contrib(val, old: bool) -> list:
+            sign = F.lit(-1 if old else 1)
+            return [
+                *[val(g).cast("string").alias(g) for g in self.group_cols],
+                sign.cast("long").alias("_sign"),
+                *[(sign * val(c).cast("long")).alias(n) for n, c in self.sum_cols],
+                # min/max: new images feed the insert-side extremum, old
+                # images the retraction-threat extremum (NULL on the
+                # other side so each aggregate sees only its images)
+                *[
+                    (nil if old else val(c)).cast(t).alias(f"_mmnew_{n}")
+                    for n, c, t, _ in self._mm_cols
+                ],
+                *[
+                    (val(c) if old else nil).cast(t).alias(f"_mmold_{n}")
+                    for n, c, t, _ in self._mm_cols
+                ],
+            ]
+
+        ct = F.col("_change_type")
+        if self.row_transform is None:
+            # one pass over the diff: every row explodes into the images it
+            # has, reading only the view's columns
+            images = F.array(
+                F.when(ct != "D", F.struct(*contrib(image(False), False))),
+                F.when(ct != "I", F.struct(*contrib(image(True), True))),
+            )
+            return (
+                delta.select(F.explode(images).alias("_img"))
+                .where(F.col("_img").isNotNull())
+                .select("_img.*")
+            )
+        # the transform is a DataFrame function and cannot run inside a
+        # struct: reconstruct each side's full image as natural rows,
+        # transform it (may explode), then project what it produced
+        names = list(
+            dict.fromkeys(
+                list(m["key_cols"]) + [f["name"] for f in self.source.schema_fields(m)]
+            )
+        )
+        new, old = (
+            self.row_transform(
+                delta.where(ct != ("I" if o else "D")).select(
+                    *[image(o)(c).alias(c) for c in names]
+                )
+            ).select(*contrib(F.col, o))
+            for o in (False, True)
+        )
+        return new.unionByName(old)
+
+    def _reaggregate(self, v_to: int, affected: DataFrame) -> DataFrame:
+        """Exact MIN/MAX of the ``affected`` groups, from the source pinned
+        at ``v_to`` (reading live state would race a concurrent source
+        commit); the broadcast semi-join keeps the scan filtered to those
+        groups' rows."""
+        pinned = self.source.read_version(v_to)
+        if self.row_transform is not None:
+            pinned = self.row_transform(pinned)
+        srcv = pinned.select(
+            *[F.col(g).cast("string").alias(g) for g in self.group_cols],
+            *[F.col(c).cast(t).alias(f"_src_{n}") for n, c, t, _ in self._mm_cols],
+        )
+        hits = srcv.join(F.broadcast(affected), self._on(srcv, affected), "left_semi")
+        return hits.groupBy(*self.group_cols).agg(
+            *[
+                (F.max if is_max else F.min)(f"_src_{n}").alias(f"_re_{n}")
+                for n, _, _, is_max in self._mm_cols
+            ]
+        )
+
     def reseed(self) -> BatchRecord:
         """Rebuild the aggregate from the source's CURRENT visible state
         (one full recompute — O(source), the cost incremental refresh
@@ -448,10 +479,7 @@ class IncrementalAggregate:
         # refresh would fold the (v_to, v_to+1] delta a second time
         want = self.recompute(version=v_to)
         cur = self.table.read().select(*self.group_cols, *self._out_cols)
-        cond = F.lit(True)
-        for g in self.group_cols:
-            cond = cond & want[g].eqNullSafe(cur[g])
-        j = want.join(cur, cond, "full_outer")
+        j = want.join(cur, self._on(want, cur), "full_outer")
         present = want["n_rows"].isNotNull()
         upserts = j.select(
             *[F.coalesce(want[g], cur[g]).alias(g) for g in self.group_cols],

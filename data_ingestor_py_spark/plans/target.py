@@ -119,6 +119,25 @@ class MergeStats:
     salt_used: int = 0  # reducers the hot keys were spread over (0 = none)
 
 
+@dataclass(frozen=True)
+class Discovery:
+    """What a merge's first job learns about its batch before any state is
+    read: the buckets it touches and its input stats. It depends only on
+    the batch and the partition spec, so it can be computed ahead of the
+    merge — folded into an action the caller runs anyway — and handed to
+    ``merge_apply(discovery=...)``; a conflict retry reuses it."""
+
+    spec: tuple  # (num_buckets, bucket_cols) the batch was bucketed under
+    rows_in: int
+    seq_min: int
+    seq_max: int
+    ev: dict[int, int]  # events per touched bucket
+    dels: dict[int, int]  # delete events per touched bucket
+    # distinct keys per bucket: exact in full stats, an HLL estimate with
+    # auto-salt in light stats, empty otherwise
+    keys: dict[int, int]
+
+
 class TargetTable:
     """A keyed, versioned, schema-evolving table of current row states."""
 
@@ -412,13 +431,18 @@ class TargetTable:
         }
 
     def _empty_state(self, m: dict) -> DataFrame:
-        fields = self.schema_fields(m)
-        ddl = ", ".join(
-            [f"{k} string" for k in m["key_cols"]]
-            + [f"`{f['name']}` {f['type']}" for f in fields]
-            + [f"{m['seq_col']} long", "_op string", "_ts timestamp"]
+        """The table's typed empty state. A filtered-out one-row SELECT
+        optimizes to an empty local relation, so collecting it (or reading
+        an empty table) runs no Spark job, unlike ``createDataFrame([])``."""
+        typed = (
+            [(k, "string") for k in m["key_cols"]]
+            + [(f["name"], f["type"]) for f in self.schema_fields(m)]
+            + [(m["seq_col"], "long"), ("_op", "string"), ("_ts", "timestamp")]
         )
-        return self.spark.createDataFrame([], ddl)
+        cols = ", ".join(
+            f"CAST(NULL AS {t}) AS `{n.replace('`', '``')}`" for n, t in typed
+        )
+        return self.spark.sql(f"SELECT {cols} WHERE false")
 
     def _align(self, df: DataFrame, m: dict, written_version: int) -> DataFrame:
         """Project a file written under ``written_version`` to the current
@@ -1327,6 +1351,7 @@ class TargetTable:
         app_meta: dict | None = None,
         unavailable_sentinel: str | None = None,
         persist_batch: bool = False,
+        discovery: Discovery | None = None,
     ) -> MergeStats:
         """Apply one micro-batch of change events. On a concurrent-writer
         commit conflict the whole merge is recomputed against the winner's
@@ -1334,15 +1359,27 @@ class TargetTable:
         optimistic retry) up to ``max_commit_retries`` times.
 
         ``persist_batch=True`` caches the input for the duration of the
-        merge. The merge is two actions (bucket discovery, then the merge
-        itself), so an un-persisted batch has its WHOLE lineage executed
-        twice; for a batch that is itself an expensive computed delta (an
-        MV fold over a changelog diff, a streaming epoch's join output)
-        that doubles the refresh cost, while the batch is delta-sized and
-        caches for free. Leave it off (default) when the batch is a cheap
-        pruned scan — caching then materializes the full row width once
-        and denies column pruning to the keys-only discovery pass (the
-        replay path measured slower with it).
+        merge. The merge runs two actions over the batch (bucket discovery,
+        then the merge itself), so an un-persisted batch has its WHOLE
+        lineage executed twice; for a batch that is itself an expensive
+        computed delta (a top-k, join or distinct view's fold over a
+        changelog diff, an SCD2 segment close) that doubles the refresh
+        cost, while the batch is delta-sized and caches for free. Leave it
+        off (default) when the batch is a cheap pruned scan — caching then
+        materializes the full row width once and denies column pruning to
+        the keys-only discovery pass (the replay path measured slower with
+        it).
+
+        ``discovery`` hands in the batch's bucket discovery, computed ahead
+        by :meth:`_discover` — typically inside an action the caller runs
+        anyway — so the merge runs only its write. The incremental-MV
+        refresh takes it from the same action that decides re-aggregation,
+        which makes caching the batch unnecessary; a staged replay could
+        discover a whole backlog in one pass the same way. It carries light
+        stats only: ``stats="full"`` or ``salt_buckets="auto"`` with a
+        discovery raise ``ValueError``. A discovery taken under another
+        partition spec (a concurrent ``rewrite_partition_spec``) is
+        re-run.
 
         ``unavailable_sentinel`` enables Debezium TOAST semantics: a
         string payload column equal to the sentinel (the wire placeholder
@@ -1372,6 +1409,11 @@ class TargetTable:
         including repo-local ones concentrated in few buckets — pay
         nothing.
         """
+        if discovery is not None and (stats == "full" or salt_buckets == "auto"):
+            raise ValueError(
+                "a precomputed discovery carries light stats only: pass "
+                "stats='light' and a fixed salt_buckets with it"
+            )
         st = None
         cached = batch.persist() if persist_batch else batch
         try:
@@ -1380,6 +1422,7 @@ class TargetTable:
                     st = self._merge_apply_once(
                         cached, salt_buckets, stats, auto_salt_min_rows,
                         auto_salt_skew_ratio, app_meta, unavailable_sentinel,
+                        discovery,
                     )
                     break
                 except CommitConflict:
@@ -1402,6 +1445,73 @@ class TargetTable:
                 self.compact_bucket_deltas(bucket_ids=over)
         return st
 
+    def _discover(
+        self,
+        m: dict,
+        batch: DataFrame,
+        stats: str = "light",
+        salt_buckets: int | str = 0,
+        extra: list | tuple = (),
+    ) -> tuple[Discovery, list]:
+        """Job 1 of a merge: bucket discovery of ``batch`` under ``m``'s
+        partition spec, from the key, ``_seq`` and ``_op`` columns only.
+
+        Per touched bucket it counts events (drives auto-salting and
+        light-stats lineage) and deletes (maintains the manifest's
+        tombstone upper bounds that let purge_tombstones prune its scan),
+        and takes the ``_seq`` bounds. ``stats='full'`` also counts
+        distinct keys per bucket (exact applied-row lineage); ``'light'``
+        skips the distinct (the shuffle then carries <= B
+        partially-aggregated rows per input partition) and the merge takes
+        per-bucket rows from the written parquet footers afterwards — the
+        cheap path for high-rate replays. ``extra`` aggregate columns ride
+        the same job; the collected per-bucket rows are returned beside the
+        :class:`Discovery` for them."""
+        key_cols, seq_col, B = m["key_cols"], m["seq_col"], m["num_buckets"]
+        bucket_cols = m.get("bucket_cols", key_cols)
+        key_struct = F.struct(*[F.col(c) for c in key_cols])
+        aggs = [
+            F.count(F.lit(1)).alias("n_ev"),
+            F.sum((F.col("_op") == "D").cast("long")).alias("n_del"),
+            F.min(seq_col).alias("seq_min"),
+            F.max(seq_col).alias("seq_max"),
+        ]
+        if stats == "full":
+            # distinct over a STRUCT of the keys, not the bare columns:
+            # count_distinct(a, b) drops tuples containing NULL, so NULL-key
+            # groups would vanish from the lineage counts
+            aggs.append(F.count_distinct(key_struct).alias("n"))
+        elif salt_buckets == "auto":
+            # light mode: lineage takes per-bucket rows from parquet footers,
+            # but the auto-salt skew signal still needs a per-bucket KEY
+            # count — approx_count_distinct rides the same shuffle for ~zero
+            # cost and +-5% error is nothing against the 8x threshold.
+            # With a FIXED salt_buckets the key count has no consumer, so
+            # light mode then skips the HLL entirely.
+            aggs.append(F.approx_count_distinct(key_struct).alias("n"))
+        rows = (
+            batch.groupBy(_bucket_expr(bucket_cols, B).alias("bkt"))
+            .agg(*aggs, *extra)
+            .collect()
+        )
+        ev = {r["bkt"]: r["n_ev"] for r in rows}
+        seq_lo = [r["seq_min"] for r in rows if r["seq_min"] is not None]
+        seq_hi = [r["seq_max"] for r in rows if r["seq_max"] is not None]
+        disc = Discovery(
+            spec=(B, tuple(bucket_cols)),
+            rows_in=sum(ev.values()),
+            seq_min=int(min(seq_lo, default=0)),
+            seq_max=int(max(seq_hi, default=0)),
+            ev=ev,
+            dels={r["bkt"]: int(r["n_del"] or 0) for r in rows},
+            keys=(
+                {r["bkt"]: r["n"] for r in rows}
+                if stats == "full" or salt_buckets == "auto"
+                else {}
+            ),
+        )
+        return disc, rows
+
     def _merge_apply_once(
         self,
         batch: DataFrame,
@@ -1411,29 +1521,29 @@ class TargetTable:
         auto_salt_skew_ratio: float = 8.0,
         app_meta: dict | None = None,
         unavailable_sentinel: str | None = None,
+        discovery: Discovery | None = None,
     ) -> MergeStats:
-        """Apply one micro-batch of change events.
+        """Apply one micro-batch of change events in two actions:
 
-        Two Spark jobs per batch:
-
-        1. *Bucket discovery* — ``groupBy(bucket).agg(count_distinct(key))``
-           on the key columns only (column pruning keeps the payload out of
-           this scan). Yields touched buckets + per-batch applied-key counts
-           for the checkpoint; input row/offset stats ride along via
-           ``observe``. <= B tiny rows collected — metadata-scale, the
-           Iceberg analogue is manifest partition summaries.
+        1. *Bucket discovery* (:meth:`_discover`, skipped when a
+           ``discovery`` is handed in) — per-bucket event/delete/key
+           counts and ``_seq`` bounds from the key columns only. <= B tiny
+           rows collected — metadata-scale, the Iceberg analogue is
+           manifest partition summaries.
         2. *Merge* — union the touched buckets' state with the raw batch and
            take the per-key max-``_seq`` row in ONE aggregation (the reduce
            subsumes batch-internal dedup, late-event rejection, and the
            upsert itself — no separate pre-reduce, which would sort the
            payload twice), then rewrite only the touched buckets.
 
+        AQE submits each shuffle stage as its own Spark job, so the two
+        actions are more jobs than that: traced, a merge runs 5 on a COW
+        streaming tail and 6 on merge-on-read batches.
+
         Per-bucket lineage counts come from the written parquet footers
         (driver-side metadata read, no job). Skewed batches can spread the
         hot key across ``salt_buckets`` reducers first (M3).
         """
-        from pyspark.sql import Observation
-
         m = self._load()
         key_cols, seq_col, B = m["key_cols"], m["seq_col"], m["num_buckets"]
         bucket_cols = m.get("bucket_cols", key_cols)
@@ -1477,60 +1587,18 @@ class TargetTable:
             )
         batch = batch.select(*[F.col(c) for c in cols])
 
-        # Job 1: touched buckets from the key + op columns only; rows_in /
-        # seq offsets observed on the same pruned scan. ``stats='full'``
-        # also counts distinct keys per bucket (exact applied-row lineage);
-        # ``'light'`` skips the distinct (the shuffle then carries <= B
-        # partially-aggregated rows per input partition) and takes
-        # per-bucket rows from the written parquet footers afterwards — the
-        # cheap path for high-rate replays. Both modes also collect
-        # per-bucket EVENT counts (drives auto-salting) and per-bucket
-        # DELETE counts (maintains the manifest's tombstone upper bounds
-        # that let purge_tombstones prune its scan).
         t_d0 = time.time()
-        obs = Observation()
-        keys_only = batch.select(*key_cols, F.col(seq_col), F.col("_op")).observe(
-            obs,
-            F.count(F.lit(1)).alias("rows_in"),
-            F.min(seq_col).alias("seq_min"),
-            F.max(seq_col).alias("seq_max"),
-        )
-        bkts = keys_only.groupBy(_bucket_expr(bucket_cols, B).alias("bkt"))
-        key_struct = F.struct(*[F.col(c) for c in key_cols])
-        aggs = [
-            F.count(F.lit(1)).alias("n_ev"),
-            F.sum((F.col("_op") == "D").cast("long")).alias("n_del"),
-        ]
-        need_key_counts = stats == "full" or salt_buckets == "auto"
-        if stats == "full":
-            # distinct over a STRUCT of the keys, not the bare columns:
-            # count_distinct(a, b) drops tuples containing NULL, so NULL-key
-            # groups would vanish from the lineage counts
-            aggs.insert(0, F.count_distinct(key_struct).alias("n"))
-        elif salt_buckets == "auto":
-            # light mode: lineage takes per-bucket rows from parquet footers,
-            # but the auto-salt skew signal still needs a per-bucket KEY
-            # count — approx_count_distinct rides the same shuffle for ~zero
-            # cost and +-5% error is nothing against the 8x threshold.
-            # With a FIXED salt_buckets the key count has no consumer, so
-            # light mode then skips the HLL entirely.
-            aggs.insert(0, F.approx_count_distinct(key_struct).alias("n"))
-        stat_rows = bkts.agg(*aggs).collect()
-        per_bucket = {r["bkt"]: (r["n"] if stats == "full" else r["n_ev"]) for r in stat_rows}
-        per_bucket_keys = (
-            {r["bkt"]: r["n"] for r in stat_rows} if need_key_counts else {}
-        )
-        per_bucket_ev = {r["bkt"]: r["n_ev"] for r in stat_rows}
-        per_bucket_del = {r["bkt"]: int(r["n_del"] or 0) for r in stat_rows}
+        if discovery is None or discovery.spec != (B, tuple(bucket_cols)):
+            discovery, _ = self._discover(m, batch, stats, salt_buckets)
+        per_bucket_ev, per_bucket_keys = discovery.ev, discovery.keys
+        per_bucket_del = discovery.dels
+        per_bucket = per_bucket_keys if stats == "full" else per_bucket_ev
         touched = sorted(per_bucket)
         if not touched:
-            # empty batch: Observation.get would assert (pyspark 4.1 edge —
-            # no row ever reaches an observed node on empty input)
             return MergeStats(0, 0, 0, m["version"], [])
-        ob = obs.get
-        rows_in = int(ob["rows_in"])
-        seq_min = int(ob["seq_min"] or 0)
-        seq_max = int(ob["seq_max"] or 0)
+        rows_in, seq_min, seq_max = (
+            discovery.rows_in, discovery.seq_min, discovery.seq_max
+        )
         rows_dedup = sum(per_bucket.values()) if stats == "full" else -1
         t_d1 = time.time()
 

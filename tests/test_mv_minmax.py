@@ -131,3 +131,120 @@ def test_minmax_replay_fold_equals_recompute_and_reseed(spark):
     )
     fresh.reseed()
     assert _rows(fresh.read()) == _rows(mv.read())
+
+
+def _spy_read_version(monkeypatch, t):
+    """Record every pinned source read (the targeted re-aggregation)."""
+    calls = []
+    orig = t.read_version
+
+    def spy(version):
+        calls.append(version)
+        return orig(version)
+
+    monkeypatch.setattr(t, "read_version", spy)
+    return calls
+
+
+def _ext(mv, lang="py"):
+    r = {r["lang"]: r for r in mv.read().collect()}[lang]
+    return r["min_v"], r["max_v"]
+
+
+def test_dominating_or_tying_insert_skips_reaggregation(spark, monkeypatch):
+    """A retraction of the extremum holder needs no source read when an
+    insert of the same batch ties or beats the stored extremum: that insert
+    holds the new extremum whatever the retraction took away."""
+    t, mv = _mk(spark)
+    _apply(spark, t, mv, [
+        ("r1", "a", "py", 5.0, 1, "U", None),
+        ("r1", "b", "py", 9.0, 2, "U", None),
+        ("r1", "c", "py", 7.0, 3, "U", None),
+    ])
+    calls = _spy_read_version(monkeypatch, t)
+    # MAX: delete the holder (9), insert a dominating 12
+    _apply(spark, t, mv, [("r1", "b", None, None, 4, "D", None),
+                          ("r2", "x", "py", 12.0, 5, "U", None)])
+    assert _ext(mv) == (5.0, 12.0)
+    # MIN: update the holder (5) away, insert a dominating 1
+    _apply(spark, t, mv, [("r1", "a", "py", 6.0, 6, "U", None),
+                          ("r2", "y", "py", 1.0, 7, "U", None)])
+    assert _ext(mv) == (1.0, 12.0)
+    # ties: the holders (12 and 1) move away while new rows match them
+    _apply(spark, t, mv, [("r2", "x", "py", 3.0, 8, "U", None),
+                          ("r3", "z", "py", 12.0, 9, "U", None),
+                          ("r2", "y", "py", 2.0, 10, "U", None),
+                          ("r3", "w", "py", 1.0, 11, "U", None)])
+    assert _ext(mv) == (1.0, 12.0)
+    assert calls == []
+
+
+def test_short_insert_reaggregates_to_runner_up(spark, monkeypatch):
+    t, mv = _mk(spark)
+    _apply(spark, t, mv, [
+        ("r1", "a", "py", 5.0, 1, "U", None),
+        ("r1", "b", "py", 9.0, 2, "U", None),
+        ("r1", "c", "py", 7.0, 3, "U", None),
+    ])
+    calls = _spy_read_version(monkeypatch, t)
+    # MAX holder 9 deleted; the insert (6) falls short of it -> runner-up 7
+    _apply(spark, t, mv, [("r1", "b", None, None, 4, "D", None),
+                          ("r2", "x", "py", 6.0, 5, "U", None)])
+    assert _ext(mv) == (5.0, 7.0)
+    # MIN holder 5 deleted; the insert (8) falls short of it -> runner-up 6
+    _apply(spark, t, mv, [("r1", "a", None, None, 6, "D", None),
+                          ("r2", "y", "py", 8.0, 7, "U", None)])
+    assert _ext(mv) == (6.0, 8.0)
+    assert len(calls) == 2
+
+
+def test_null_inserts_keep_reaggregation(spark, monkeypatch):
+    """An insert with a NULL value decides nothing: the group is still
+    re-aggregated from the pinned source."""
+    t, mv = _mk(spark)
+    _apply(spark, t, mv, [
+        ("r1", "a", "py", 5.0, 1, "U", None),
+        ("r1", "b", "py", 9.0, 2, "U", None),
+    ])
+    calls = _spy_read_version(monkeypatch, t)
+    _apply(spark, t, mv, [("r1", "b", None, None, 3, "D", None),
+                          ("r2", "x", "py", None, 4, "U", None)])
+    assert _ext(mv) == (5.0, 5.0)
+    assert len(calls) == 1
+
+
+def test_row_transform_view_with_max(spark):
+    """A row_transform view (one row per word of ``lang``) keeps the
+    two-sided fold; its MAX(v) per word must equal a recompute after
+    dominating, tying and short retractions."""
+    t = TargetTable.create(
+        spark, _mkroot("mvmm-src-"), key_cols=["repo", "path"],
+        columns=[("lang", "string"), ("v", "double")], num_buckets=4,
+    )
+    mv = IncrementalAggregate.create(
+        spark, _mkroot("mvmm-agg-"), t, group_cols=["word"],
+        max_cols=[("max_v", "v", "double")],
+        row_transform=lambda df: df.select(
+            F.explode(F.split("lang", " ")).alias("word"), "v"
+        ),
+    )
+    batches = [
+        [("r1", "a", "py go", 5.0, 1, "U", None),
+         ("r1", "b", "py", 9.0, 2, "U", None),
+         ("r1", "c", "go rs", 7.0, 3, "U", None)],
+        # py's holder 9 moves to rs with a higher value; go's holder (7)
+        # is deleted with no insert -> re-aggregates to 5
+        [("r1", "b", "rs", 10.0, 4, "U", None),
+         ("r1", "c", None, None, 5, "D", None)],
+        # ties and a dominating insert for rs, a short one for py
+        [("r1", "b", "py", 10.0, 6, "U", None),
+         ("r2", "a", "rs", 10.0, 7, "U", None),
+         ("r2", "b", "py go", 4.0, 8, "U", None)],
+    ]
+    for rows in batches:
+        df = spark.createDataFrame(rows, DDL).withColumn("_ts", F.current_timestamp())
+        t.merge_apply(df)
+        mv.refresh()
+        assert _rows(mv.read()) == _rows(mv.recompute())
+    st = {r["word"]: r["max_v"] for r in mv.read().collect()}
+    assert st == {"py": 10.0, "go": 5.0, "rs": 10.0}
