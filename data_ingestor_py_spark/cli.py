@@ -60,7 +60,8 @@ def _add_common(p: argparse.ArgumentParser) -> None:
                    help="copy-on-write bucket rewrite vs merge-on-read delta "
                         "layers (only applies when this run CREATES the table)")
     p.add_argument("--mor-max-deltas", type=int, default=8,
-                   help="auto-compact a bucket at this many delta layers (0 = manual)")
+                   help="fold a bucket into a new base in the merge that would "
+                        "give it this many delta layers (0 = manual)")
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -42,8 +42,8 @@ def auto_maintain(
     """Run the needed subset of maintenance; returns an action report
     (``{action: result}`` — absent key = policy decided it wasn't
     needed). ``delta_threshold`` defaults to half the table's
-    ``mor_max_deltas`` (compact early, off the write path's forced-
-    compaction cliff)."""
+    ``mor_max_deltas``: compact early, off the write path, so fewer merges
+    pay for rewriting a bucket that reaches the threshold."""
     m = table._load()
     report: dict = {}
 

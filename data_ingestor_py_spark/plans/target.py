@@ -52,7 +52,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestor_py_spark.operators.dedup import latest_by_key, salted_latest_by_key
@@ -343,15 +343,17 @@ class TargetTable:
         - ``"mor"`` (merge-on-read): each merge APPENDS one batch-deduped
           delta layer per touched bucket; the read path resolves
           base+deltas with the same max-``_seq`` winner rule the merge
-          uses, and buckets are compacted back to one layer once they
-          accumulate ``mor_max_deltas`` layers (0 = manual compaction
-          only). Per-batch write cost is O(batch) — at 10^10-event scale a
-          1%%-of-keys batch under hash bucketing touches ~every bucket, so
-          COW would rewrite ~the whole table per batch while MoR writes
-          only the batch; read amplification is bounded by the compaction
-          threshold. This is Hudi's MoR / Paimon's LSM tradeoff; final
-          state is byte-identical to COW (same winner rule, associative —
-          pinned by tests/test_mor.py state-hash equality)."""
+          uses. The merge that would add a bucket's ``mor_max_deltas``-th
+          layer rewrites that bucket as a new base instead, in the same
+          write and commit (LSM compact-on-flush; 0 = manual compaction
+          only). Per-batch write cost is O(batch) below the threshold —
+          at 10^10-event scale a 1%%-of-keys batch under hash bucketing
+          touches ~every bucket, so COW would rewrite ~the whole table per
+          batch while MoR writes only the batch; read amplification is
+          bounded by the threshold. This is Hudi's MoR / Paimon's LSM
+          tradeoff; final state is byte-identical to COW (same winner
+          rule, associative — pinned by tests/test_mor.py state-hash
+          equality)."""
         if merge_mode not in ("cow", "mor"):
             raise ValueError(f"merge_mode must be 'cow' or 'mor', got {merge_mode!r}")
         os.makedirs(root, exist_ok=True)  # data plane (Spark-written parquet)
@@ -1431,18 +1433,9 @@ class TargetTable:
         finally:
             if persist_batch:
                 cached.unpersist()
-        # MoR auto-compaction rides OUTSIDE the merge's conflict-retry: a
-        # compaction race must never re-apply the (already committed) merge.
-        # compact_bucket_deltas does its own conflict retries internally.
-        m = self._load()
-        thr = m.get("mor_max_deltas") or 0
-        if m.get("merge_mode") == "mor" and thr:
-            over = [
-                int(b) for b, e in m["buckets"].items()
-                if len(e.get("deltas", ())) >= thr
-            ]
-            if over:
-                self.compact_bucket_deltas(bucket_ids=over)
+        # MoR layers stay below ``mor_max_deltas`` without a pass here: the
+        # merge that would add a bucket's threshold-th layer folds it in its
+        # own commit, and only merges add layers.
         return st
 
     def _discover(
@@ -1530,15 +1523,26 @@ class TargetTable:
            counts and ``_seq`` bounds from the key columns only. <= B tiny
            rows collected — metadata-scale, the Iceberg analogue is
            manifest partition summaries.
-        2. *Merge* — union the touched buckets' state with the raw batch and
-           take the per-key max-``_seq`` row in ONE aggregation (the reduce
-           subsumes batch-internal dedup, late-event rejection, and the
-           upsert itself — no separate pre-reduce, which would sort the
-           payload twice), then rewrite only the touched buckets.
+        2. *Merge* — union the rewritten buckets' state with the raw batch
+           and take the per-key max-``_seq`` row in ONE window pass
+           (:meth:`_winners`; the pass subsumes batch-internal dedup,
+           late-event rejection, and the upsert itself — no separate
+           pre-reduce, which would sort the payload twice), then write only
+           the touched buckets.
+
+        COW rewrites every touched bucket. Merge-on-read reads no state for
+        a bucket below ``mor_max_deltas``: the pass over its batch rows
+        alone is its new delta layer, so per-batch cost is O(batch)
+        regardless of table size — the property that survives 10^10
+        events, where a hash-spread batch touches every bucket. A bucket
+        whose layer would be its ``mor_max_deltas``-th is folded instead:
+        its raw base and delta layers join the same pass and it is
+        rewritten as a new base (recorded under ``compacted`` in the
+        ``merge_delta`` history entry). Both kinds land in one snapshot dir
+        and one commit.
 
         AQE submits each shuffle stage as its own Spark job, so the two
-        actions are more jobs than that: traced, a merge runs 5 on a COW
-        streaming tail and 6 on merge-on-read batches.
+        actions are more jobs than that: traced, a merge runs 5.
 
         Per-bucket lineage counts come from the written parquet footers
         (driver-side metadata read, no job). Skewed batches can spread the
@@ -1625,20 +1629,22 @@ class TargetTable:
             else:
                 salt_buckets = 0
 
-        if m.get("merge_mode") == "mor":
-            return self._merge_delta_commit(
-                m, batch, salt_buckets, rows_in, seq_min, seq_max, rows_dedup,
-                per_bucket, per_bucket_del, touched, app_meta, t_d1 - t_d0,
-            )
+        # buckets rewritten as a new base: every touched one under COW; under
+        # MoR those that have a base and whose next layer would reach the
+        # threshold (the rest get a delta layer, or a first base)
+        mor = m.get("merge_mode") == "mor"
+        thr = m.get("mor_max_deltas") or 0
+        if mor:
+            rewrite = [
+                b for b in touched
+                if thr and str(b) in m["buckets"]
+                and len(m["buckets"][str(b)].get("deltas", ())) + 1 >= thr
+            ]
+        else:
+            rewrite = touched
 
-        # Job 2: one-shot merge reduce + bucket rewrite, structured as a
-        # single shuffle: hash-partition by bucket, sort each partition by
-        # (key asc, _seq desc, payload desc), keep the first row per key via
-        # lag() — the same winner max(struct(_seq, payload...)) would pick,
-        # but the output is already partitioned exactly as the write layout
-        # (partitionBy(bkt)), so no second repartition shuffle is needed.
-        from pyspark.sql import Window
-
+        # Job 2: one-shot merge reduce + bucket write, structured as a
+        # single shuffle (see _winners).
         with_bkt = batch.withColumn("bkt", _bucket_expr(bucket_cols, B))
         if salt_buckets:
             # hot-key pre-reduce (M3): shrink the skewed key's rows across
@@ -1646,38 +1652,15 @@ class TargetTable:
             with_bkt = salted_latest_by_key(
                 with_bkt, key_cols + ["bkt"], seq_col, salt_buckets
             ).select(*cols, "bkt")
-        state = self._state_df(m, touched).withColumn("bkt", _bucket_expr(bucket_cols, B))
-        unioned = state.unionByName(with_bkt)
-
-        payload = [c for c in cols if c not in key_cols and c != seq_col]
+        unioned = self._with_layers(m, with_bkt, rewrite)
         if unavailable_sentinel is not None:
+            payload = [c for c in cols if c not in key_cols and c != seq_col]
             merged = self._merge_window_carry(
                 m, unioned, cols, key_cols, seq_col, payload,
                 unavailable_sentinel,
             )
         else:
-            # (measured: a leading xxhash64 sort-prefix column does not beat
-            # the plain string sort here and costs 8B/row of shuffle — keep
-            # it simple)
-            w = Window.partitionBy("bkt").orderBy(
-                *[F.asc(c) for c in key_cols], F.desc(seq_col),
-                *[F.desc(c) for c in payload]
-            )
-            # NULL-safe group-start detection: a row starts a new key group
-            # iff it is the partition's first row (lag over a constant is
-            # NULL only there) or any key column differs null-safely from
-            # its predecessor. A plain `prev != col` would mark EVERY row
-            # whose predecessor key is NULL as a group start, so NULL-keyed
-            # events would never dedup and tombstones could not reject late
-            # NULL-key upserts.
-            key_changed = F.lag(F.lit(1)).over(w).isNull()
-            for c in key_cols:
-                key_changed = key_changed | ~F.lag(c).over(w).eqNullSafe(F.col(c))
-            merged = (
-                unioned.withColumn("_is_first", key_changed)
-                .where(F.col("_is_first"))
-                .select(*cols, "bkt")
-            )
+            merged = self._winners(m, unioned)
 
         new_v = m["version"] + 1
         rel, _ = self._write_snap_dir(merged, new_v, m)
@@ -1686,9 +1669,16 @@ class TargetTable:
         # rebase-on-conflict check needs them byte-for-byte (entries are
         # replaced, never mutated, so shallow refs are stable)
         base_entries = {str(b): m["buckets"].get(str(b)) for b in touched}
+        rewritten = set(rewrite)
         for b in touched:
             old_e = m["buckets"].get(str(b))
             entry = {"path": f"{rel}/bkt={b}", "schema": m["current_schema"]}
+            if old_e is not None and b not in rewritten:
+                # a MoR delta layer: the batch's own winners on top of the
+                # bucket's existing layers
+                entry = {
+                    **old_e, "deltas": [*old_e.get("deltas", ()), entry]
+                }
             # tombstone upper bound: carried + newly-arrived deletes. An
             # upsert superseding an old tombstone makes the bound loose,
             # never wrong; purge_tombstones tightens it to the exact count
@@ -1700,15 +1690,19 @@ class TargetTable:
                 entry["ts_ub"] = old_e["ts_ub"] + per_bucket_del.get(b, 0)
             m["buckets"][str(b)] = entry
         m["version"] = new_v
-        m["history"].append(
-            {"at": time.time(), "snapshot": new_v, "op": "merge",
-             "rows_in": rows_in, "rows_applied": rows_dedup, "buckets": touched}
-        )
+        hist = {"at": time.time(), "snapshot": new_v,
+                "op": "merge_delta" if mor else "merge",
+                "rows_in": rows_in, "rows_applied": rows_dedup, "buckets": touched}
+        if mor:
+            hist["compacted"] = rewrite
+        m["history"].append(hist)
         if app_meta is not None:
             m["app_meta"] = dict(app_meta)
         try:
             self._commit_manifest(m)
         except CommitConflict:
+            if mor:
+                raise  # MoR recomputes against the winner (merge_apply)
             m = self._rebase_merge_commit(m, base_entries, rel, app_meta)
         return MergeStats(
             rows_in, rows_dedup, len(touched), m["version"],
@@ -1754,8 +1748,6 @@ class TargetTable:
         chain broken by a tombstone) resolve to NULL — "value unknown",
         stated in merge_apply's docs.
         """
-        from pyspark.sql import Window
-
         w = Window.partitionBy("bkt").orderBy(
             *[F.asc(c) for c in key_cols], F.asc(seq_col),
             *[F.asc(c) for c in payload]
@@ -1842,7 +1834,7 @@ class TargetTable:
         every bucket still recompute (the disjointness check fails) —
         correctness never depends on the fast path.
 
-        COW merges only (the MoR delta commit has its own protocol).
+        COW merges only (a MoR merge recomputes against the winner).
         """
         entry = dict(cand["history"][-1])
         for _ in range(3):
@@ -1891,79 +1883,62 @@ class TargetTable:
             "rebase lost the version CAS 3 times — recomputing the merge"
         )
 
-    def _merge_delta_commit(
-        self,
-        m: dict,
-        batch: DataFrame,
-        salt_buckets: int,
-        rows_in: int,
-        seq_min: int,
-        seq_max: int,
-        rows_dedup: int,
-        per_bucket: dict,
-        per_bucket_del: dict,
-        touched: list[int],
-        app_meta: dict | None,
-        discover_s: float,
-    ) -> MergeStats:
-        """Merge-on-read Job 2: reduce the BATCH ALONE to one row per key
-        (same winner struct as the COW window — max is associative, so
-        layering per-batch winners resolves to the COW result) and append
-        it as one delta layer per touched bucket. No state read, no state
-        rewrite: per-batch cost is O(batch) regardless of table size — the
-        property that survives 10^10 events, where a hash-spread batch
-        touches every bucket and COW would rewrite the whole table.
-
-        The write is ``partitionBy(bkt)`` off the reduce's own shuffle
-        (grouping keys include the bucket expr), so this stays a
-        single-Exchange job like the COW merge."""
-        t_m0 = time.time()
-        key_cols, seq_col, B = m["key_cols"], m["seq_col"], m["num_buckets"]
-        bucket_cols = m.get("bucket_cols", key_cols)
-        cols = self.current_columns(m)
-
-        with_bkt = batch.withColumn("bkt", _bucket_expr(bucket_cols, B))
-        if salt_buckets:
-            reduced = salted_latest_by_key(
-                with_bkt, key_cols + ["bkt"], seq_col, salt_buckets
-            ).select(*cols, "bkt")
-        else:
-            reduced = latest_by_key(
-                with_bkt.select(*cols, "bkt"), key_cols + ["bkt"], seq_col
-            ).select(*cols, "bkt")
-
-        new_v = m["version"] + 1
-        rel, out_dir = self._write_snap_dir(reduced, new_v, m)
-        written = self._written_buckets(out_dir)
-        layer_schema = m["current_schema"]
-        for b in touched:
-            if b not in written:
-                continue  # defensive: stats saw events but no rows landed
+    def _with_layers(
+        self, m: dict, batch: DataFrame | None, bucket_ids: list[int]
+    ) -> DataFrame | None:
+        """``batch`` (current columns + ``bkt``) unioned with the RAW rows of
+        every base and delta layer of ``bucket_ids``, schema-aligned but not
+        resolved: the winner pass over the union resolves layers and batch
+        in one sort. ``None`` only when there is neither."""
+        layers: list[tuple[int, str]] = []
+        for b in bucket_ids:
             e = m["buckets"].get(str(b))
-            if e is None:
-                # first layer for this bucket IS its base
-                e = {"path": f"{rel}/bkt={b}", "schema": layer_schema,
-                     "ts_ub": per_bucket_del.get(b, 0)}
-            else:
-                e.setdefault("deltas", []).append(
-                    {"path": f"{rel}/bkt={b}", "schema": layer_schema}
-                )
-                if "ts_ub" in e:
-                    e["ts_ub"] += per_bucket_del.get(b, 0)
-            m["buckets"][str(b)] = e
-        m["version"] = new_v
-        m["history"].append(
-            {"at": time.time(), "snapshot": new_v, "op": "merge_delta",
-             "rows_in": rows_in, "rows_applied": rows_dedup, "buckets": touched}
+            if e is not None:
+                layers.append((e["schema"], e["path"]))
+                layers += [(d["schema"], d["path"]) for d in e.get("deltas", ())]
+        state = self._grouped_read(m, layers)
+        if state is None:
+            return batch
+        bucket_cols = m.get("bucket_cols", m["key_cols"])
+        state = state.withColumn("bkt", _bucket_expr(bucket_cols, m["num_buckets"]))
+        return state if batch is None else state.unionByName(batch)
+
+    def _winners(self, m: dict, unioned: DataFrame) -> DataFrame:
+        """The merge's winner pass, shared by the COW merge, the MoR merge
+        and its fold, and :meth:`compact_bucket_deltas`: one row per key
+        per bucket, the same winner ``max(struct(_seq, payload...))``
+        would pick (the read path's ``latest_by_key`` rule, so layering
+        per-batch winners resolves to the COW result).
+
+        A single shuffle: hash-partition by bucket, sort each partition by
+        (key asc, _seq desc, payload desc), keep the first row per key via
+        lag(). The output is already partitioned and ordered as the write
+        layout (``partitionBy(bkt)``), so the write adds no second
+        shuffle or sort."""
+        key_cols, seq_col = m["key_cols"], m["seq_col"]
+        cols = self.current_columns(m)
+        payload = [c for c in cols if c not in key_cols and c != seq_col]
+        # (measured: a leading xxhash64 sort-prefix column does not beat
+        # the plain string sort here and costs 8B/row of shuffle — keep
+        # it simple)
+        w = Window.partitionBy("bkt").orderBy(
+            *[F.asc(c) for c in key_cols], F.desc(seq_col),
+            *[F.desc(c) for c in payload]
         )
-        if app_meta is not None:
-            m["app_meta"] = dict(app_meta)
-        self._commit_manifest(m)
-        return MergeStats(
-            rows_in, rows_dedup, len(touched), new_v, sorted(per_bucket.items()),
-            seq_min, seq_max,
-            discover_s=round(discover_s, 3), merge_s=round(time.time() - t_m0, 3),
-            salt_used=int(salt_buckets),
+        # NULL-safe group-start detection: a row starts a new key group
+        # iff it is the partition's first row (lag over a constant is
+        # NULL only there) or any key column differs null-safely from
+        # its predecessor. A plain `prev != col` would mark EVERY row
+        # whose predecessor key is NULL as a group start, so NULL-keyed
+        # events would never dedup and tombstones could not reject late
+        # NULL-key upserts.
+        key_changed = F.lag(F.lit(1)).over(w).isNull()
+        for c in key_cols:
+            key_changed = key_changed | ~F.lag(c).over(w).eqNullSafe(F.col(c))
+        return (
+            unioned.withColumn("_is_first", key_changed)
+            .where(F.col("_is_first"))
+            .select(*cols, "bkt")
         )
 
     def compact_bucket_deltas(
@@ -1981,9 +1956,12 @@ class TargetTable:
 
         Scale shape: cost is O(selected buckets' resolved state), amortized
         O(table · batches / threshold) like any LSM compaction; untouched
-        buckets carry over by reference. The auto-trigger in
-        :meth:`merge_apply` keeps read amplification bounded by
-        ``mor_max_deltas`` without operator action."""
+        buckets carry over by reference. This is the merge's own fold
+        (:meth:`_winners` over the raw layers) with no batch: a MoR merge
+        already folds any bucket its layer would take to
+        ``mor_max_deltas``, so this call is for operators and
+        :func:`~data_ingestor_py_spark.plans.maintenance.auto_maintain`
+        compacting earlier than that."""
         for _ in range(max_retries):
             m = self._load()
             if bucket_ids is None:
@@ -1998,11 +1976,7 @@ class TargetTable:
                 )
             if not ids:
                 return None
-            bucket_cols = m.get("bucket_cols", m["key_cols"])
-            cols = self.current_columns(m)
-            out = self._state_df(m, ids).select(*cols).withColumn(
-                "bkt", _bucket_expr(bucket_cols, m["num_buckets"])
-            )
+            out = self._winners(m, self._with_layers(m, None, ids))
             new_v = m["version"] + 1
             rel, out_dir = self._write_snap_dir(out, new_v, m)
             written = self._written_buckets(out_dir)

@@ -1,6 +1,7 @@
 """Merge-on-read (MoR) mode: delta-layer merges, read-path resolution,
-auto/manual compaction, GC safety, and byte-identical equality with the
-copy-on-write merge (plans/target.py merge_mode='mor').
+the threshold fold inside the merge, manual compaction, GC safety, and
+byte-identical equality with the copy-on-write merge (plans/target.py
+merge_mode='mor').
 
 The reference engine always writes through (INSERT/UPDATE per record,
 db/postgres_query_builder.py:16-45); COW vs MoR is the lake-side
@@ -9,12 +10,18 @@ contract (per-key max-_seq winner, content sha256 invariant) is identical
 in both modes, which every test here pins via snapshot_hash equality.
 """
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from data_ingestor_py_spark.plans.inspect import history_df
 from data_ingestor_py_spark.plans.replay import replay, split_batches
+from data_ingestor_py_spark.plans.target import TargetTable, _ref_dirs
 from data_ingestor_py_spark.sources.generator import change_events
 from tests.conftest import make_table
+from tests.test_commit_rebase import _ids_by_bucket
 
 
 def _prep(df):
@@ -85,16 +92,19 @@ def test_mor_redelivery_idempotent(spark, tmp_path):
 
 
 def test_mor_auto_compaction_bounds_layers(spark, tmp_path):
-    """With mor_max_deltas=2, no bucket may end a merge_apply with more
-    than 2 delta layers; state is invariant across the compactions."""
+    """With mor_max_deltas=2, no bucket may end a merge_apply with 2 delta
+    layers: the merge that would add the second folds the bucket inside its
+    own commit (no separate compaction commit); state is invariant."""
     cow, mor = _pair(spark, tmp_path, mor_max_deltas=2)
     ev = change_events(spark, 3000, n_repos=20, paths_per_repo=15, seed=5)
     batches = split_batches(ev, 6)
     replay(cow, batches, prepare=lambda d, i: _prep(d))
     replay(mor, batches, prepare=lambda d, i: _prep(d))
     m = mor._load()
-    assert all(len(e.get("deltas", [])) < 2 + 1 for e in m["buckets"].values())
-    assert any(h["op"] == "compact_deltas" for h in m["history"])
+    assert all(len(e.get("deltas", [])) < 2 for e in m["buckets"].values())
+    hist = mor.read_history()
+    assert any(h["op"] == "merge_delta" and h["compacted"] for h in hist)
+    assert not any(h["op"] == "compact_deltas" for h in hist)
     assert mor.snapshot_hash() == cow.snapshot_hash()
 
 
@@ -202,25 +212,227 @@ def test_mor_lookup_resolves_layers(spark, tmp_path):
     assert len(rows) == 1 and rows[0]["content"] == "new"
 
 
-def test_mor_merge_single_exchange(spark, tmp_path):
-    """The delta merge must stay one shuffle: the batch reduce groups on
-    (key, bucket) and the partitionBy(bkt) write rides that partitioning —
-    no state read, no second Exchange."""
-    t = make_table(spark, tmp_path / "t", merge_mode="mor", mor_max_deltas=0)
-    ev = _prep(change_events(spark, 500, n_repos=10, paths_per_repo=5, seed=1))
-    m = t._load()
-    from data_ingestor_py_spark.plans.target import _bucket_expr
-    from data_ingestor_py_spark.operators.dedup import latest_by_key
+def test_mor_merge_single_exchange(spark, tmp_path, monkeypatch):
+    """The MoR merge stays one shuffle whether it only layers or also
+    folds: batch rows and the folded buckets' raw layers share the winner
+    pass's hash partitioning on the bucket, and the partitionBy(bkt) write
+    rides it."""
+    t = make_table(spark, tmp_path / "t", merge_mode="mor", mor_max_deltas=2)
+    plans = []
+    real = TargetTable._write_snap_dir
 
-    cols = t.current_columns(m)
-    with_bkt = ev.withColumn("bkt", _bucket_expr(m["bucket_cols"], m["num_buckets"]))
-    reduced = latest_by_key(
-        with_bkt.select(*cols, "bkt"), m["key_cols"] + ["bkt"], m["seq_col"]
-    ).select(*cols, "bkt")
-    plan = reduced._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") == 1, plan
+    def spy(self, df, *a, **kw):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(self, df, *a, **kw)
+
+    monkeypatch.setattr(TargetTable, "_write_snap_dir", spy)
+    ev = _prep(change_events(spark, 500, n_repos=10, paths_per_repo=5, seed=1))
+    for _ in range(3):  # base, delta layer, fold
+        t.merge_apply(ev)
+    assert t._load()["history"][-1]["compacted"]
+    assert len(plans) == 3
+    for plan in plans:
+        assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
 def test_mor_mode_validation(spark, tmp_path):
     with pytest.raises(ValueError, match="merge_mode"):
         make_table(spark, tmp_path / "t", merge_mode="bogus")
+
+
+# ------------------------------------------------ fold at the threshold
+# A merge whose delta layer would take a bucket to mor_max_deltas rewrites
+# that bucket as a new base in the same write and commit.
+
+
+def _id_table(spark, tmp, **kw):
+    return make_table(spark, tmp, key_cols=["id"], columns=[("val", "long")], **kw)
+
+
+def _id_batch(spark, ids, seq0, dels=()):
+    rows = [(i, n, seq0 + n, "D" if i in dels else "U") for n, i in enumerate(ids)]
+    df = spark.createDataFrame(rows, "id string, val long, _seq long, _op string")
+    return df.withColumn("_ts", F.timestamp_seconds(F.col("_seq")))
+
+
+def test_mor_fold_mixed_batch(spark, tmp_path):
+    """One batch folds a bucket at the threshold, layers one below it and
+    starts a new one — one snapshot dir, one version, COW-equal state."""
+    by_b = _ids_by_bucket(spark)
+    cow = _id_table(spark, tmp_path / "cow")
+    mor = _id_table(spark, tmp_path / "mor", merge_mode="mor", mor_max_deltas=2)
+    batches = [
+        # bases in buckets 0, 1, 2; two tombstones in bucket 0
+        _id_batch(spark, by_b[0][:20] + by_b[1][:20] + by_b[2][:20], 100,
+                  dels=by_b[0][:2]),
+        # one delta layer in buckets 0 and 1
+        _id_batch(spark, by_b[0][:10] + by_b[1][:10], 1000),
+        # 0 reaches the threshold, 2 stays below it, 5 is new
+        _id_batch(spark, by_b[0][5:25] + by_b[2][:10] + by_b[5][:10], 2000,
+                  dels=by_b[0][20:23]),
+    ]
+    for b in batches:
+        cow.merge_apply(b)
+        mor.merge_apply(b)
+    m = mor._load()
+    assert m["version"] == 3
+    h = m["history"][-1]
+    assert (h["op"], h["buckets"], h["compacted"]) == ("merge_delta", [0, 2, 5], [0])
+    bk = m["buckets"]
+    rel = bk["5"]["path"].split("/")[0]
+    assert rel.startswith("snap-000003-")
+    assert bk["0"]["path"] == f"{rel}/bkt=0" and not bk["0"].get("deltas")
+    assert [d["path"] for d in bk["2"]["deltas"]] == [f"{rel}/bkt=2"]
+    assert len(bk["1"]["deltas"]) == 1 and not bk["1"]["deltas"][0]["path"].startswith(rel)
+    assert "deltas" not in bk["5"]
+    # the folded bucket carries its bound plus this batch's deletes
+    assert bk["0"]["ts_ub"] == 2 + 3
+    assert bk["5"]["ts_ub"] == 0
+    assert mor.snapshot_hash() == cow.snapshot_hash()
+    detail = history_df(mor).where("snapshot = 3").first()["detail"]
+    assert json.loads(detail)["compacted"] == [0]
+
+
+def test_mor_fold_across_evolve(spark, tmp_path):
+    """Layers written under the old schema fold with a batch written under
+    the new one into a base at the current schema."""
+    cow = _id_table(spark, tmp_path / "cow")
+    mor = _id_table(spark, tmp_path / "mor", merge_mode="mor", mor_max_deltas=2)
+    ids = [str(i) for i in range(120)]
+    for t in (cow, mor):
+        t.merge_apply(_id_batch(spark, ids[:80], 100))
+        t.merge_apply(_id_batch(spark, ids[:40], 1000, dels=ids[:5]))
+        t.evolve(add=[("note", "string")])
+        t.merge_apply(
+            _id_batch(spark, ids[20:120], 2000).withColumn("note", F.lit("n"))
+        )
+    m = mor._load()
+    h = m["history"][-1]
+    assert h["compacted"]
+    for b in h["compacted"]:
+        e = m["buckets"][str(b)]
+        assert e["schema"] == m["current_schema"] and not e.get("deltas")
+    assert mor.snapshot_hash() == cow.snapshot_hash()
+    got = {r["id"]: r["note"] for r in mor.read().collect()}
+    assert got["10"] is None and got["30"] == "n" and "3" not in got
+
+
+def test_mor_threshold_one_folds_every_merge(spark, tmp_path):
+    cow, mor = _pair(spark, tmp_path, mor_max_deltas=1)
+    ev = change_events(spark, 2000, n_repos=15, paths_per_repo=10, seed=17)
+    batches = split_batches(ev, 4)
+    seen = []
+
+    def no_layers(i, t, rec):
+        seen.append(i)
+        assert not any(e.get("deltas") for e in t._load()["buckets"].values())
+
+    replay(cow, batches, prepare=lambda d, i: _prep(d))
+    replay(mor, batches, prepare=lambda d, i: _prep(d), on_batch_end=no_layers)
+    assert seen == [0, 1, 2, 3]
+    hist = mor.read_history()
+    assert [h["compacted"] for h in hist[1:]] == [h["buckets"] for h in hist[1:]]
+    assert mor.snapshot_hash() == cow.snapshot_hash()
+
+
+def test_mor_threshold_replay_commits_one_version_per_batch(spark, tmp_path):
+    cow, mor = _pair(spark, tmp_path, mor_max_deltas=2)
+    ev = change_events(spark, 2500, n_repos=15, paths_per_repo=10, seed=19)
+    batches = split_batches(ev, 5)
+    replay(cow, batches, prepare=lambda d, i: _prep(d))
+    recs = replay(mor, batches, prepare=lambda d, i: _prep(d))
+    assert [r.snapshot_version for r in recs] == [1, 2, 3, 4, 5]
+    hist = mor.read_history()
+    assert [h["op"] for h in hist] == ["merge_delta"] * 5
+    assert sum(bool(h["compacted"]) for h in hist) >= 2
+    assert mor.snapshot_hash() == cow.snapshot_hash()
+
+
+def test_mor_fold_commit_crash_resumes(spark, tmp_path, monkeypatch):
+    """A crash after the fold's data write, before its manifest commit:
+    resume through replay reaches the uninterrupted state, and the
+    orphaned snapshot dir is never referenced (expiry reclaims it)."""
+    ev = change_events(spark, 2000, n_repos=15, paths_per_repo=10, seed=21)
+    batches = split_batches(ev, 4)
+    prep = lambda d, i: _prep(d)  # noqa: E731
+    ref = make_table(spark, tmp_path / "ref", merge_mode="mor", mor_max_deltas=2)
+    replay(ref, batches, prepare=prep)
+    t = make_table(spark, tmp_path / "t", merge_mode="mor", mor_max_deltas=2)
+
+    writes = []
+    real_write, real_commit = TargetTable._write_snap_dir, TargetTable._commit_manifest
+
+    def spy_write(self, *a, **kw):
+        out = real_write(self, *a, **kw)
+        writes.append(out[0])
+        return out
+
+    crashed = []
+
+    def crash_once(self, m):
+        if not crashed and (m.get("history") or [{}])[-1].get("compacted"):
+            crashed.append(writes[-1])
+            raise RuntimeError("crash between the fold's write and its commit")
+        return real_commit(self, m)
+
+    monkeypatch.setattr(TargetTable, "_write_snap_dir", spy_write)
+    monkeypatch.setattr(TargetTable, "_commit_manifest", crash_once)
+    with pytest.raises(RuntimeError, match="crash between"):
+        replay(t, batches, prepare=prep)
+    orphan = crashed[0]
+    assert t._load()["version"] == 2  # batches 0 and 1 committed
+    monkeypatch.setattr(TargetTable, "_commit_manifest", real_commit)
+    recs = replay(t, batches, prepare=prep)
+    assert [r.batch_id for r in recs] == [2, 3]
+    assert t.snapshot_hash() == ref.snapshot_hash()
+    assert os.path.isdir(os.path.join(t.root, orphan))
+    assert orphan not in _ref_dirs(t._load())
+    t.expire_snapshots(keep_last=1)
+    assert not os.path.exists(os.path.join(t.root, orphan))
+    assert t.snapshot_hash() == ref.snapshot_hash()
+
+
+def test_mor_fold_conflict_recomputes_against_winner(spark, tmp_path, monkeypatch):
+    """A second writer commits between the fold's write and its CAS: the
+    retry re-folds against the winner's manifest and lands on the state of
+    the serial order."""
+    by_b = _ids_by_bucket(spark)
+    everything = [i for b in range(8) for i in by_b[b][:20]]
+    layer = [i for b in range(4) for i in by_b[b][:10]]
+    mine = by_b[0][:30] + by_b[1][:30]    # folds buckets 0 and 1
+    theirs = by_b[1][:30] + by_b[2][:30]  # folds buckets 1 and 2 first
+    t = _id_table(spark, tmp_path / "t", merge_mode="mor", mor_max_deltas=2)
+    serial = _id_table(spark, tmp_path / "serial")
+    for b in (_id_batch(spark, everything, 100), _id_batch(spark, layer, 1000)):
+        t.merge_apply(b)
+        serial.merge_apply(b)
+    other = TargetTable(spark, t.root)
+
+    writes = {"n": 0}
+    fired = []
+    real_write, real_commit = TargetTable._write_snap_dir, TargetTable._commit_manifest
+
+    def counting_write(self, *a, **kw):
+        writes["n"] += self is t
+        return real_write(self, *a, **kw)
+
+    def race(self, m):
+        if self is t and not fired:
+            fired.append(True)
+            other.merge_apply(_id_batch(spark, theirs, 3000, dels=by_b[2][:3]))
+        return real_commit(self, m)
+
+    monkeypatch.setattr(TargetTable, "_write_snap_dir", counting_write)
+    monkeypatch.setattr(TargetTable, "_commit_manifest", race)
+    st = t.merge_apply(_id_batch(spark, mine, 5000))
+    assert fired and writes["n"] == 2  # the lost fold was recomputed
+    m = t._load()
+    assert m["version"] == st.snapshot_version == 4
+    theirs_h, mine_h = m["history"][-2:]
+    assert theirs_h["compacted"] == [1, 2]
+    # the winner already folded bucket 1, so the retry layers it
+    assert mine_h["compacted"] == [0]
+    assert len(m["buckets"]["1"]["deltas"]) == 1
+    serial.merge_apply(_id_batch(spark, theirs, 3000, dels=by_b[2][:3]))
+    serial.merge_apply(_id_batch(spark, mine, 5000))
+    assert t.snapshot_hash() == serial.snapshot_hash()
